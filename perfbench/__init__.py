@@ -1,0 +1,5 @@
+"""Seeded end-to-end benchmark for the transcript pipeline.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root. See ``run.py``.
+"""
