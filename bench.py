@@ -13,7 +13,7 @@ local[8] and local[32] in separate SparkSessions — the sandbox stand-in for
 N vs 4N executors (BASELINE.md). efficiency = (t8 / t32) / 4.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_MULT (default 8),
+SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_MULT (default 256),
 SPARK_GRAFT_SKIP_SCALING=1 to skip the probe.
 """
 

@@ -11,9 +11,10 @@ Here one pass over the parsed+enriched turns fans out to 3+ sink tables
     sink_assistant_turns role = assistant
 
 A row may satisfy several predicates and lands in EVERY matching sink (like
-a doc indexed under several shards). ``sink_tags`` computes the tag array
-once; the writer persists the tagged frame and appends each sink with a
-cheap filter — single-pass economics (SURVEY.md §4 "fan-out router").
+a doc indexed under several shards). ``routed`` computes the tag array once
+and explodes it; the batch writer (pipeline.commit_batch) persists the
+exploded frame and appends each sink with a cheap filter — single-pass
+economics (SURVEY.md §4 "fan-out router").
 """
 
 from __future__ import annotations
@@ -40,25 +41,15 @@ def sink_predicates() -> dict[str, Column]:
     return {s: F.expr(SINK_PREDICATES_SQL[s]) for s in SINKS}
 
 
-def with_sink_tags(df: DataFrame) -> DataFrame:
-    """Compute the tag array once per row (array<string> ``sinks``).
-
-    Unmatched slots stay NULL inside the array; callers must drop them
-    after exploding. array_compact() here would be an ArrayFilter HOF —
-    interpreted eval, breaking whole-stage codegen on the fan-out hot path.
-    """
-    preds = sink_predicates()
-    tags = F.array(*[F.when(preds[s], F.lit(s)) for s in SINKS])
-    return df.withColumn("sinks", tags)
-
-
 def routed(df: DataFrame) -> DataFrame:
     """Exploded (sink, row) view — one output row per (row, matching sink).
 
-    This is the logical fan-out; the physical writer (streaming/microbatch)
-    instead persists the tagged frame and runs one filtered append per sink
-    to avoid materializing the explode twice. The null-tag filter runs on
-    the exploded scalar column (codegen) rather than inside the array (HOF).
+    The tag array is computed once per row; unmatched slots stay NULL
+    inside it and are dropped after the explode, on the exploded scalar
+    column (codegen). array_compact() or a filter() inside the array would
+    be an ArrayFilter HOF — interpreted eval, breaking whole-stage codegen
+    on the fan-out hot path. The batch writer (pipeline.commit_batch)
+    persists this exploded frame and runs one filtered append per sink.
 
     Shape alternatives measured (3.2M turns, local[8], sink-count job,
     round 3): this explode+filter 4.63s; array_compact before the explode
@@ -68,15 +59,17 @@ def routed(df: DataFrame) -> DataFrame:
     0.16s — 29x faster but ONLY valid when the query wants counts, since
     it never materializes the routed rows (route_counts-style consumers
     could use it; the router itself exists to emit rows to sinks).
-    Also measured: the writer's persist-then-3-filtered-passes shape costs
-    5.05s and three re-computed passes 5.76s for the COUNT job — the
-    cache materialization outweighs the Generate here; the writer still
-    uses persist because its passes APPEND full rows (re-parsing per sink
-    would triple the parse, and appends can't share one explode without
-    materializing it anyway).
+    Also measured: a persisted frame with 3 filtered passes costs 5.05s
+    and three re-computed passes 5.76s for the COUNT job — the cache
+    materialization outweighs the Generate here; the writer still
+    persists because its passes APPEND full rows (re-parsing per sink
+    would triple the parse) and the agg_terms commit reads it a fourth
+    time.
     """
+    preds = sink_predicates()
+    tags = F.array(*[F.when(preds[s], F.lit(s)) for s in SINKS])
     return (
-        with_sink_tags(df)
+        df.withColumn("sinks", tags)
         .withColumn("sink", F.explode("sinks"))
         .filter(F.col("sink").isNotNull())
         .drop("sinks")

@@ -1,6 +1,8 @@
 """DuckDB-dialect oracle SQL for every SQL-expressible query in
-queries.py. Keys match SPARK_QUERIES; missing keys are rows-only checks
-(banded LSH, simhash blocking, ANN — not reasonably ANSI-SQL-expressible).
+queries.py. Keys match SPARK_QUERIES. The one missing key, approx_distinct,
+is a rows-only check (its HLL++ sketch estimate is engine-specific); the
+minhash/simhash, LSH and ANN queries have oracles that replay the same
+hashing and scoring in SQL.
 
 The transcripts/dim CTE prelude is prepended by build_oracles(); every
 aggregate/computed column is aliased identically to the Spark side.

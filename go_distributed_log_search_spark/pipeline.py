@@ -13,14 +13,19 @@ index, this pipeline declares the whole flow as one Catalyst plan:
 
 and lets Tungsten pipeline scan->parse->enrich->tag in a single
 whole-stage-codegen span. The only wide dependency in the hot path is the
-aggregation shuffle — checked by tests/test_plans.py.
+aggregation shuffle — checked by tests/test_plan_audit.py.
+
+:func:`commit_batch` is the one batch commit every ingest path shares
+(micro-batch loop, Structured Streaming ``foreachBatch``, spark-submit job).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators import aggregate, enrich, parse, route
+from .sources.catalog import Warehouse
 from .transcripts import transcripts_df
 
 
@@ -45,3 +50,30 @@ def run_pipeline(spark: SparkSession, sf_dir: str, nsalt: int = aggregate.DEFAUL
         "agg_terms": aggregate.term_counts(tagged, nsalt=nsalt, hot_keys=hot),
         "ordering": aggregate.ordering_check(base),
     }
+
+
+def commit_batch(wh: Warehouse, enriched: DataFrame, batch_id: str) -> dict[str, int]:
+    """Commit one ingest batch (S5, mod.go:263-371): one ``sink_*`` table
+    per sink, the ``agg_terms`` posting counts, then ONE lineage append
+    with every table's committed row count (A2, mod.go:362-365) — lineage
+    lands after all data commits, so a crash before it re-runs the batch
+    into the same ``batch_id`` partitions. Returns the lineage counts.
+
+    The exploded routed frame is persisted: the sink appends need full
+    rows and ``term_counts`` needs the ``sink`` column, so without it each
+    of the four passes would re-run the parse.
+    """
+    routed = route.routed(enriched).persist()
+    try:
+        counts: dict[str, int] = {}
+        for sink in route.SINKS:
+            sink_df = routed.filter(F.col("sink") == sink).drop("sink")
+            counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
+        # hot_keys=None: a batch is a bounded slice — partial agg absorbs
+        # its skew; sample-based detection would add two jobs per batch
+        aggs = aggregate.term_counts(routed, hot_keys=None)
+        counts["agg_terms"] = wh.append_batch(aggs, "agg_terms", batch_id)
+        wh.record_lineage_many(batch_id, counts)
+    finally:
+        routed.unpersist()
+    return counts

@@ -54,7 +54,7 @@ def q_route_counts(spark, sf_dir):
 def q_agg_terms(spark, sf_dir):
     # single-sink slice: predicate pushed before the fan-out explode
     # (route.routed_sink docstring; row-identical to
-    # routed(...).filter(sink = 'errors'), pinned in test_plans.py)
+    # routed(...).filter(sink = 'errors'), pinned in test_plan_audit.py)
     tagged = route.routed_sink(pipeline.parsed_enriched(spark, sf_dir), "errors")
     return aggregate.term_counts(tagged)
 

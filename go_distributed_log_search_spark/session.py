@@ -1,15 +1,19 @@
 """SparkSession factory tuned for this sandbox and for scale.
 
-The sandbox is one JVM with 32 threads (local[32], 128 GiB); production is a
-multi-executor cluster reading 100 TB+. Every knob below is chosen so the
-same plan shape survives the scale-up:
+Locally the session is one JVM with ``local[cpus]`` task threads (``cpus``
+from the argument, else SPARK_GRAFT_CPUS, else 32) and, by default, a 4g
+heap plus 6g off-heap; production is a multi-executor cluster reading
+100 TB+. Every knob below is chosen so the same plan shape survives the
+scale-up:
 
-- AQE on: runtime shuffle-partition coalescing + skew-join splitting. At
-  10^12 turns the conv_id distribution is Zipf-skewed (BASELINE.json
-  north_rule) and AQE handles the join side of that; the aggregation side is
-  handled explicitly by salting (operators/aggregate.py).
+- AQE off by default: every hot-path exchange carries an explicit
+  partition count, so locally AQE only adds stage barriers. SPARK_GRAFT_AQE=1
+  turns it on (runtime shuffle-partition coalescing + skew-join splitting),
+  which a cluster reading unknown-sized, Zipf-skewed inputs should do; the
+  aggregation side of the skew is handled explicitly by salting
+  (operators/aggregate.py) either way.
 - shuffle.partitions defaults to the core count locally; on a real cluster
-  this is overridden to ~2-3x total cores (AQE coalesces down).
+  this is overridden to ~2-3x total cores.
 - Arrow enabled: every pandas UDF crosses the JVM<->Python boundary in
   columnar Arrow batches, never row-at-a-time (north-rule hot-path
   constraint: no per-row Python).

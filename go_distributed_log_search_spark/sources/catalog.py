@@ -23,7 +23,6 @@ with the SAME interface and the same commit discipline:
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -175,11 +174,6 @@ class Warehouse:
         df = self.spark.createDataFrame(rows, schema)
         df.coalesce(1).write.mode("append").parquet(self.path(table))
 
-    def record_lineage(self, batch_id: str, sink: str, row_count: int) -> None:
-        self._append_rows(
-            "lineage", [(batch_id, sink, row_count, time.time())], LINEAGE_SCHEMA
-        )
-
     def record_lineage_many(self, batch_id: str, counts: dict[str, int]) -> None:
         """One append for a whole batch's lineage (one tiny Spark job
         instead of one per sink — the write is still AFTER all data
@@ -210,9 +204,3 @@ class Warehouse:
         cp = self.read("checkpoints").filter(F.col("source_id") == source_id)
         w = F.max("watermark").alias("watermark")
         return cp.groupBy("source_id", "part_id").agg(w)
-
-    # ------------------------------------------------------------- misc
-
-    def write_manifest(self, name: str, payload: dict) -> None:
-        with open(os.path.join(self.root, f"{name}.json"), "w") as f:
-            json.dump(payload, f, indent=2, sort_keys=True)

@@ -27,12 +27,11 @@ with trigger(processingTime="30 seconds") — see streaming/structured.py.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import aggregate, enrich, parse, route
+from .. import pipeline
+from ..operators import enrich, parse
 from ..sources.catalog import Warehouse
 
 SOURCE_ID = "transcripts"
@@ -82,26 +81,9 @@ def run_microbatch_ingest(
         batch = tagged_input.filter(F.col("part_id").isin([int(p) for p in batch_parts]))
 
         enriched = enrich.enrich_turns(parse.parse_turns(batch), spark)
-        routed = route.routed(enriched).persist()
-        try:
-            # 1. sink appends (S5 commit)
-            counts: dict[str, int] = {}
-            for sink in route.SINKS:
-                sink_df = routed.filter(F.col("sink") == sink).drop("sink")
-                counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
-            # aggregate table rides the same batch cycle. hot_keys=None: a
-            # micro-batch is a bounded slice — partial agg absorbs its skew;
-            # per-batch sample-based detection would add two jobs per batch
-            # for nothing (callers with known hot keys pass them through).
-            aggs = aggregate.term_counts(routed, hot_keys=None)
-            wh.append_batch(aggs, "agg_terms", batch_id)
-            counts["agg_terms"] = -1
-            # 2. lineage rows AFTER all data commits (A2, mod.go:362-365);
-            # one append for the whole batch
-            wh.record_lineage_many(batch_id, counts)
-        finally:
-            routed.unpersist()
-        # 3. checkpoint LAST (ST3 ordering, index.go:258-274)
+        # sink + agg_terms data, then lineage (S5 commit, A2)
+        pipeline.commit_batch(wh, enriched, batch_id)
+        # checkpoint LAST (ST3 ordering, index.go:258-274)
         seen = {
             r.part_id: r.w
             for r in batch.groupBy("part_id").agg((F.max("turn_idx") + 1).alias("w")).collect()
@@ -114,8 +96,3 @@ def run_microbatch_ingest(
         committed.append(batch_id)
         batch_no += 1
     return committed
-
-
-def uuid_batch_id() -> str:
-    """Reference-parity batch id (index.go:87) for non-resumable one-shots."""
-    return str(uuid.uuid4())

@@ -24,9 +24,9 @@ with exactly-once sink effects when the batch write is idempotent
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import enrich, parse, route
+from .. import pipeline
+from ..operators import enrich, parse
 from ..sources.catalog import Warehouse
 
 
@@ -54,12 +54,7 @@ def stream_ingest_available_now(
 
     def process_batch(batch_df: DataFrame, batch_no: int) -> None:
         enriched = enrich.enrich_turns(parse.parse_turns(batch_df), batch_df.sparkSession)
-        routed = route.routed(enriched)
-        batch_id = f"stream-{batch_no}"
-        for sink in route.SINKS:
-            sink_df = routed.filter(F.col("sink") == sink).drop("sink")
-            n = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
-            wh.record_lineage(batch_id, sink, n)
+        pipeline.commit_batch(wh, enriched, f"stream-{batch_no}")
         n_batches["n"] += 1
 
     q = (

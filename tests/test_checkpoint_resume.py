@@ -41,6 +41,11 @@ def test_cold_run_commits_everything(spark, transcripts, tmp_path):
         .groupBy("sink").agg(F.sum("row_count").alias("n")).collect()
     )
     assert {r.sink: r.n for r in lineage} == direct
+    # the agg_terms lineage rows record the committed posting rows
+    (agg_lineage,) = (
+        wh.lineage().filter(F.col("sink") == "agg_terms").agg(F.sum("row_count")).first()
+    )
+    assert agg_lineage == wh.read("agg_terms").count() > 0
     # nothing pending after a full run (ST6)
     assert microbatch.pending_partitions(wh, list(range(8))) == []
 
@@ -149,7 +154,8 @@ def test_drop(spark, transcripts, tmp_path):
 
 def test_structured_streaming_matches_batch(spark, transcripts, tmp_path):
     """The Structured Streaming path (file source, availableNow) commits
-    the same per-sink row sets as the batch router."""
+    the same per-sink row sets as the batch router, through the same batch
+    commit: lineage matches the committed rows, and agg_terms is written."""
     inp = str(tmp_path / "input")
     transcripts.repartition(3).write.parquet(inp)
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -167,3 +173,10 @@ def test_structured_streaming_matches_batch(spark, transcripts, tmp_path):
             for r in direct.filter(F.col("sink") == sink).select("conv_id", "turn_idx", "text").collect()
         )
         assert streamed[sink] == rows, sink
+    lineage = {
+        r.sink: r.n
+        for r in wh.lineage().groupBy("sink").agg(F.sum("row_count").alias("n")).collect()
+    }
+    assert {s: lineage[s] for s in route.SINKS} == {s: len(streamed[s]) for s in route.SINKS}
+    assert wh.exists("agg_terms")
+    assert lineage["agg_terms"] == wh.read("agg_terms").count()

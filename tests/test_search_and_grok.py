@@ -56,6 +56,21 @@ def test_grok_udf_matches_catalyst(spark):
     assert c_rows == u_rows
 
 
+def test_kv_key_is_matched_literally(spark):
+    """A key's regex metacharacters match only themselves: key ``a.b``
+    must not extract from ``axb: 7`` (an unescaped ``.`` would), and the
+    fixed prefix offset still lands on the value."""
+    from go_distributed_log_search_spark.functions import grok
+
+    df = spark.createDataFrame([(0, "axb: 7"), (1, "a.b: 9 a.b: x")], ["id", "text"])
+    got = df.select(
+        "id",
+        grok.kv_long_expr(F.col("text"), "a.b").alias("n"),
+        grok.kv_str_expr(F.col("text"), "a.b").alias("s"),
+    ).orderBy("id")
+    assert [(r.n, r.s) for r in got.collect()] == [(None, None), (9, "9")]
+
+
 def test_match_predicate(spark, parsed):
     pred = search.match_predicate(["text", "level"], "WARN")
     n = parsed.filter(pred).count()

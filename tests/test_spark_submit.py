@@ -98,16 +98,20 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
     }
     assert got == expected
 
-    # fan-out writer: each per-sink table the submitted job committed
-    # through the Warehouse (batch_id partition) holds exactly the counted
-    # rows (routed-row count parity on disk), and the lineage side table
-    # records the same per-sink row counts (north rule: per-partition
-    # lineage + row-count metrics).
-    for sink, n_rows in rec_n["sink_counts"].items():
-        (written,) = duck.sql(
+    # batch commit: each sink_* table the submitted job committed through
+    # the Warehouse (batch_id partition) holds exactly the counted rows
+    # (routed-row count parity on disk), and the lineage side table
+    # records the same per-sink row counts plus the agg_terms rows on disk
+    # (north rule: per-partition lineage + row-count metrics).
+    def rows_on_disk(table: str) -> int:
+        (n,) = duck.sql(
             "SELECT COUNT(*) FROM read_parquet("
-            f"'{sink_dir}/{sink}/batch_id=submit-0/*.parquet')"
+            f"'{sink_dir}/{table}/batch_id=submit-0/*.parquet')"
         ).fetchone()
+        return n
+
+    for sink, n_rows in rec_n["sink_counts"].items():
+        written = rows_on_disk(f"sink_{sink}")
         assert written == n_rows, f"{sink}: wrote {written}, counted {n_rows}"
     lineage = {
         sink: n
@@ -116,4 +120,6 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
             f"'{sink_dir}/lineage/*.parquet')"
         ).fetchall()
     }
-    assert lineage == rec_n["sink_counts"]
+    assert {s: lineage[s] for s in rec_n["sink_counts"]} == rec_n["sink_counts"]
+    assert lineage["agg_terms"] == rows_on_disk("agg_terms") > 0
+    assert set(lineage) == set(rec_n["sink_counts"]) | {"agg_terms"}
