@@ -157,17 +157,16 @@ def _visit(cpus: int, mult: int, runs: int, job: str = "counts") -> tuple[float,
     import shutil
     import tempfile
 
-    # FIXED 4g heap at every level (per-core 0.5 GiB/core sizing was tried
-    # in an earlier round and REVERTED after a same-phase sweep at
-    # local[32] on this exact job: 16g/Xmn12g -> 13.8s wall, 600 GC
-    # task-s/run; 8g/Xmn6g -> 10.4s, 48; 4g/Xmn3g -> 10.2s, 53;
+    # FIXED 4g heap (session.DRIVER_MEM) at every level (per-core 0.5
+    # GiB/core sizing was tried in an earlier round and REVERTED after a
+    # same-phase sweep at local[32] on this exact job: 16g/Xmn12g ->
+    # 13.8s wall, 600 GC task-s/run; 8g/Xmn6g -> 10.4s, 48; 4g/Xmn3g -> 10.2s, 53;
     # 16g G1 -> 13.5s, 79. This sandbox's proactive page reclaimer
     # (DAMON) evicts cold heap pages between GC passes, so a large
     # mostly-cold eden page-faults its way through every allocation sweep
     # — the opposite of how a real 4N cluster's 4x heap behaves. GC
     # threads and ActiveProcessorCount still scale per-core so each level
     # looks like a real N-core executor).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     os.environ.setdefault(
         "SPARK_GRAFT_JIT_OPTS",
         "-XX:TieredStopAtLevel=1 -XX:+UseParallelGC -Xmn3g "
@@ -286,15 +285,13 @@ def _visit_launch(lvl: int, mult: int, runs: int, job: str):
                 _PYFILES_ZIP = _submit.make_pyfiles_zip(
                     os.path.join(tempfile.gettempdir(), "spark-graft-engine.zip")
                 )
-            mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
             jit = os.environ.get(
                 "SPARK_GRAFT_JIT_OPTS",
                 "-XX:TieredStopAtLevel=1 -XX:+UseParallelGC -Xmn3g "
                 f"-XX:ParallelGCThreads={lvl}",
             )
             argv = _submit.submit_argv(
-                script, lvl, _PYFILES_ZIP, visit_args,
-                driver_mem=mem, jit_opts=jit,
+                script, lvl, _PYFILES_ZIP, visit_args, jit_opts=jit
             )
             return argv, _submit.submit_env(lvl)
         except (ImportError, FileNotFoundError):

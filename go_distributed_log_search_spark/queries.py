@@ -2138,32 +2138,14 @@ def q_ctx_amplification(spark, sf_dir):
     return chatformat.ctx_amplification(_t(spark, sf_dir))
 
 
-# Registration ORDER is part of the driver contract: the driver gates
-# exactly the FIRST 50 keys (a count cut, not a time budget — see
-# BASELINE.md "Round-5 handoff"). Round-6 window (VERDICT r5 'Next
-# round' item 1, executed verbatim): positions 1-5 = the five keys every
-# previous 50-row window sacrificed (`ooo_turns`, `conv_duration_hist`,
-# `ttfr_stats`, `response_ratio_stats`, `ctx_amplification`) — after
-# this round EVERY registered query has had a driver CORRECTNESS row;
-# positions 6-50 = the 45 oldest-vintage carryover keys (last driver
-# row r02/r03), re-certifying the oldest evidence — including the 8
-# bench-headline queries this optimization round touched — at current
-# HEAD. Rotation is a pure dict reorder: no key added, removed, or
-# changed; the full 158-key value-level sweep re-verified after it.
+# Registration order is part of the driver contract: the driver gates the
+# first 50 keys.
 SPARK_QUERIES = {
-    # -- round-6 gate window, 1-5: the five keys never gated by any
-    # prior 50-row window (VERDICT r5 'Next round' item 1) ----------
     "ooo_turns": q_ooo_turns,
     "conv_duration_hist": q_conv_duration_hist,
     "ttfr_stats": q_ttfr_stats,
     "response_ratio_stats": q_response_ratio_stats,
     "ctx_amplification": q_ctx_amplification,
-    # -- window 6-50: the 45 oldest-vintage carryover keys (last
-    # driver row r02/r03), re-certified at round-6 HEAD — includes
-    # the bench headline queries this round optimized.
-    # (approx_distinct is excluded: rows-only by design — no oracle —
-    # so a window slot would only record err=no_oracle; range_join,
-    # the next-oldest key, takes the slot.) ---------------------------
     "datetime_multiformat": q_datetime_multiformat,
     "parse_casts": q_parse_casts,
     "ip_normalize": q_ip_normalize,
@@ -2209,11 +2191,7 @@ SPARK_QUERIES = {
     "set_ops": q_set_ops,
     "asof_join": q_asof_join,
     "range_join": q_range_join,
-    # -- positions 51+: remaining carryover surface in prior relative
-    # order (every key green in CORRECTNESS_r03-r05 or value-checked
-    # by tests/test_entry_oracle.py), heaviest md5_60 oracle-parity
-    # dedup paths last so a time-budgeted sweep still gates the cheap
-    # rows first. -----------------------------------------------------
+    # -- 51+: heaviest md5_60 oracle-parity dedup paths last ----------
     "dsir_weights": q_dsir_weights,
     "entropy_hist": q_entropy_hist,
     "cluster_purity": q_cluster_purity,

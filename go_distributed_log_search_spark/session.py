@@ -1,16 +1,19 @@
 """SparkSession factory tuned for this sandbox and for scale.
 
-Locally the session is one JVM with ``local[cpus]`` task threads (``cpus``
-from the argument, else SPARK_GRAFT_CPUS, else 32) and, by default, a 4g
-heap plus 6g off-heap; production is a multi-executor cluster reading
+This module is the one place that sizes a session. Locally the session is
+one JVM with ``local[cpus]`` task threads: ``cpus`` comes from the argument,
+else ``SPARK_GRAFT_CPUS``, else the cores this process may run on (what
+``nproc`` reports). The driver gets a fixed 4g heap (``DRIVER_MEM``) plus 6g
+off-heap (``OFFHEAP_SIZE``); production is a multi-executor cluster reading
 100 TB+. Every knob below is chosen so the same plan shape survives the
 scale-up:
 
-- AQE off by default: every hot-path exchange carries an explicit
-  partition count, so locally AQE only adds stage barriers. SPARK_GRAFT_AQE=1
-  turns it on (runtime shuffle-partition coalescing + skew-join splitting),
-  which a cluster reading unknown-sized, Zipf-skewed inputs should do; the
-  aggregation side of the skew is handled explicitly by salting
+- AQE off unless a caller enables it through ``extra_conf``
+  (``{"spark.sql.adaptive.enabled": "true"}``): every hot-path exchange
+  carries an explicit partition count, so locally AQE only adds stage
+  barriers. A cluster reading unknown-sized, Zipf-skewed inputs should
+  enable it (runtime shuffle-partition coalescing + skew-join splitting);
+  the aggregation side of the skew is handled explicitly by salting
   (operators/aggregate.py) either way.
 - shuffle.partitions defaults to the core count locally; on a real cluster
   this is overridden to ~2-3x total cores.
@@ -18,6 +21,20 @@ scale-up:
   columnar Arrow batches, never row-at-a-time (north-rule hot-path
   constraint: no per-row Python).
 - Session timezone pinned UTC so timestamp semantics are cluster-invariant.
+
+Environment variables read by the engine (``go_distributed_log_search_spark/``
+and ``jobs/``); there are no others:
+
+- ``SPARK_GRAFT_CPUS``: the default core count (above). ``submit.submit_env``
+  sets it so a submitted job runs at the level its ``--master`` names.
+- ``SPARK_GRAFT_JIT_OPTS``: replaces the GC/JIT part of the driver JVM
+  options (:func:`driver_java_options`); bench.py's scaling probe uses a
+  C1-only JIT through it.
+- ``SPARK_GRAFT_LOCAL_DIR``: ``spark.local.dir`` (default
+  ``/dev/shm/spark-local``).
+- ``SPARK_GRAFT_CACHE``: root of the materialized transcripts caches
+  (transcripts.py; default ``.cache`` beside the package).
+- ``SPARK_GRAFT_SF_DIR``: jobs/pipeline_job.py's default ``--sf-dir``.
 """
 
 from __future__ import annotations
@@ -26,12 +43,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+# 4g heap (not 12g): execution memory lives OFF-heap (OFFHEAP_SIZE), so the
+# heap only carries short-lived row/token objects — a small, hot heap keeps
+# this sandbox's proactive page reclaimer (DAMON: cold pages get reclaimed
+# and fault back expensively) away from it.
+DRIVER_MEM = "4g"
+OFFHEAP_SIZE = "6g"
 
 
-def driver_java_options(
-    cpus: int, driver_mem: str = "4g", jit_opts: str | None = None
-) -> str:
+def driver_java_options(cpus: int, jit_opts: str | None = None) -> str:
     """The full driver-JVM option string for an N-core-node session.
 
     Exposed as a function (not inlined in :func:`get_spark`) because the
@@ -93,7 +114,7 @@ def driver_java_options(
         # through heap growth and measured 8+ MINUTES where steady state is
         # 10s. Pre-touching at startup moves that cost to one predictable
         # sequential pass.
-        + f" -Xms{driver_mem} -XX:+AlwaysPreTouch"
+        + f" -Xms{DRIVER_MEM} -XX:+AlwaysPreTouch"
         # Faithful N-core-node emulation for the scaling probe: local[8] on
         # a 32-core host still gets ~23 ParallelGC threads, 32-wide JIT /
         # ForkJoinPool / netty sizing — free parallelism a real 8-core
@@ -114,41 +135,24 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-appropriate defaults."""
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
-    # 4g heap (not 12g): execution memory lives OFF-heap (below), so the
-    # heap only carries short-lived row/token objects — a small, hot heap
-    # keeps this sandbox's proactive page reclaimer (DAMON: cold pages get
-    # reclaimed and fault back expensively) away from it.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
     # The sandbox resolver points at a blackhole nameserver; any stray
     # JVM DNS lookup stalls for its full timeout. Pin everything to
     # 127.0.0.1 and cache negative lookups forever.
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
     os.environ.setdefault("SPARK_LOCAL_HOSTNAME", "localhost")
-    dns_opts = driver_java_options(cpus, driver_mem)
+    dns_opts = driver_java_options(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE default OFF locally, ON in production (SPARK_GRAFT_AQE=1;
-        # round-6 change): every hot-path exchange here carries an explicit
-        # partition count (repartition(n, key) / pinned shuffle_partitions),
-        # so at local scale AQE contributes no decisions — only a
-        # per-exchange materialization barrier plus a driver re-planning
-        # pause between stages (measured on the sf0.1 headline queries:
-        # 8 jobs -> 3 jobs on route_counts, full pipeline 0.41 -> 0.38s,
-        # agg_terms 0.36 -> 0.28s, min-of-5). A real cluster reading
-        # unknown-sized 100 TB inputs should run with SPARK_GRAFT_AQE=1 so
-        # runtime coalescing + skew-join splitting engage; the salting in
-        # operators/aggregate.py covers the aggregation-skew side either
-        # way (AQE skew handling only applies to joins).
-        .config(
-            "spark.sql.adaptive.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_AQE", "0") in ("1", "true")
-            else "false",
-        )
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE OFF (round-6 change): every hot-path exchange here carries an
+        # explicit partition count (repartition(n, key) / pinned
+        # shuffle_partitions), so at local scale AQE contributes no
+        # decisions — only a per-exchange materialization barrier plus a
+        # driver re-planning pause between stages (measured on the sf0.1
+        # headline queries: 8 jobs -> 3 jobs on route_counts, full pipeline
+        # 0.41 -> 0.38s, agg_terms 0.36 -> 0.28s, min-of-5).
+        .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # Spark 4 routes lower()/upper() under UTF8_BINARY through ICU
         # (CollationSupport.Lower.execBinaryICU). In this sandbox that path
@@ -163,15 +167,15 @@ def get_spark(
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", DRIVER_MEM)
         # Execution memory (Tungsten hash-agg maps, sort/shuffle buffers)
         # OFF-heap: these buffers are task-lived — on-heap they get tenured
         # and GC-scanned, and measured 70-100 stop-the-world GC seconds per
         # scaling-job run at 32 threads. Off-heap they are malloc'd/freed
         # outside the GC entirely (scaling job: 16.3s -> 13.5s at
         # local[32]). Production executors use the same split.
-        .config("spark.memory.offHeap.enabled", os.environ.get("SPARK_GRAFT_OFFHEAP", "true"))
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_GRAFT_OFFHEAP_SIZE", "6g"))
+        .config("spark.memory.offHeap.enabled", "true")
+        .config("spark.memory.offHeap.size", OFFHEAP_SIZE)
         # local small-SF tuning: split packing at the default 128MB/4MB
         # open-cost folds a 64-file table into a handful of splits, capping
         # map-stage parallelism far below the core count (the map stages

@@ -5,7 +5,7 @@ spark-submit --py-files on a multi-executor cluster at two cluster sizes".
 This module is that launch path: it packages the engine as a zip, builds
 the spark-submit argv for an N-core level, and is exercised end-to-end by
 tests/test_spark_submit.py (two levels, identical results) and by bench.py's
-scaling probe when SPARK_GRAFT_SUBMIT=1.
+scaling probe unless SPARK_GRAFT_SUBMIT=0.
 
 Mirrors the reference's deployment story (README.md:48-63: a single static
 binary shipped to each node); Spark's equivalent of "ship the binary" is
@@ -23,7 +23,7 @@ import os
 import shutil
 import zipfile
 
-from .session import driver_java_options
+from .session import DRIVER_MEM, driver_java_options
 
 PKG_NAME = "go_distributed_log_search_spark"
 
@@ -72,8 +72,6 @@ def submit_argv(
     cpus: int,
     pyfiles_zip: str,
     app_args: tuple[str, ...] | list[str] = (),
-    driver_mem: str | None = None,
-    extra_conf: dict[str, str] | None = None,
     jit_opts: str | None = None,
 ) -> list[str]:
     """argv for ``spark-submit --master local[cpus] --py-files zip script``.
@@ -81,36 +79,36 @@ def submit_argv(
     Driver memory and extraJavaOptions MUST ride the submit command line:
     spark-submit launches the JVM before the Python driver runs, so the
     builder-time settings in session.get_spark are launch-time no-ops on
-    this path (they still match — both come from driver_java_options, so
-    the in-process and submitted JVMs are configured identically).
+    this path (they still match — both come from session.DRIVER_MEM and
+    driver_java_options, so the in-process and submitted JVMs are
+    configured identically).
     """
     bin_ = spark_submit_bin()
     if bin_ is None:
         raise FileNotFoundError("spark-submit not found (SPARK_HOME or PATH)")
-    mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
-    argv = [
+    return [
         bin_,
         "--master", f"local[{cpus}]",
-        "--driver-memory", mem,
+        "--driver-memory", DRIVER_MEM,
         "--conf",
-        f"spark.driver.extraJavaOptions={driver_java_options(cpus, mem, jit_opts)}",
+        f"spark.driver.extraJavaOptions={driver_java_options(cpus, jit_opts)}",
         "--conf", "spark.driver.bindAddress=127.0.0.1",
         "--conf", "spark.driver.host=127.0.0.1",
         "--py-files", pyfiles_zip,
+        script,
+        *app_args,
     ]
-    for k, v in (extra_conf or {}).items():
-        argv += ["--conf", f"{k}={v}"]
-    argv.append(script)
-    argv += list(app_args)
-    return argv
 
 
 def submit_env(cpus: int) -> dict[str, str]:
-    """Subprocess env for a submitted job: DNS pins must be in the
-    environment BEFORE the JVM starts (session.py sets them too late on
-    this path), and SPARK_GRAFT_CPUS tells get_spark inside the job which
-    level it runs at (the job re-asserts master local[cpus]; spark-submit's
-    --master and the builder agree by construction)."""
+    """Subprocess env for a submitted job.
+
+    DNS pins must be in the environment BEFORE the JVM starts (session.py
+    sets them too late on this path). SPARK_GRAFT_CPUS is the only sizing
+    the job receives: get_spark inside the job defaults to it, so the job's
+    session is local[cpus] (agreeing with spark-submit's --master) and its
+    transcripts cache, sized from the session's default parallelism, has
+    ``cpus`` files."""
     env = dict(os.environ)
     env["SPARK_LOCAL_IP"] = "127.0.0.1"
     env["SPARK_LOCAL_HOSTNAME"] = "localhost"

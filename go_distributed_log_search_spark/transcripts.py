@@ -24,6 +24,9 @@ Properties engineered into the view (mirroring FIXTURES.md §1):
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 
 # Shared SQL template. {events}/{documents} are table references:
@@ -170,6 +173,21 @@ def transcripts_view_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(transcripts_sql_spark(sf_dir))
 
 
+def _cache_root() -> str:
+    """Root dir of the materialized transcripts caches.
+
+    ``SPARK_GRAFT_CACHE`` if set, else ``.cache`` beside the package. Under
+    zipimport (spark-submit --py-files engine.zip) ``__file__`` points inside
+    the zip, which Hadoop's local FS rejects as a parent dir; the default
+    then falls back to a host-local scratch root — same role as an
+    executor's local working dir on a real cluster.
+    """
+    default = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
+    if not os.path.isdir(os.path.dirname(default)):
+        default = os.path.join(tempfile.gettempdir(), "spark-graft-cache")
+    return os.environ.get("SPARK_GRAFT_CACHE", default)
+
+
 def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -> DataFrame:
     """The transcripts input table.
 
@@ -187,19 +205,7 @@ def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -
     """
     if not materialize:
         return transcripts_view_df(spark, sf_dir)
-    import os
-
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    default_root = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    if not os.path.isdir(os.path.dirname(default_root)):
-        # zipimport (spark-submit --py-files engine.zip): __file__ points
-        # inside the zip, which Hadoop's local FS rejects as a parent dir.
-        # Fall back to a host-local scratch root — same role as an
-        # executor's local working dir on a real cluster.
-        import tempfile
-
-        default_root = os.path.join(tempfile.gettempdir(), "spark-graft-cache")
-    cache_root = os.environ.get("SPARK_GRAFT_CACHE", default_root)
     # ROUND-ROBIN layout — deliberately NOT partitioned by conv_id. The
     # conv distribution is Zipf-skewed (two hot convs own ~40% of turns);
     # key-partitioned files would concentrate a hot conv into one file and
@@ -210,22 +216,18 @@ def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -
     # SURVEY.md §4.2) — same discipline as size-balanced Iceberg data
     # files at 100 TB.
     #
-    # File count = the host's benchmark core count (round-6 change; was a
-    # fixed 64): session.py sizes maxPartitionBytes so every file is its
-    # own split, so the file count IS the map-stage task count for every
-    # consumer of this table. 64 files meant every sub-second sf0.1 scan
-    # stage ran TWO waves of tiny tasks on 32 cores (measured: the scan
-    # stage of each headline query spent ~half its wall in the second
-    # wave). One file per core -> one wave. Tied to SPARK_GRAFT_CPUS (not
-    # the current session's parallelism) so every session shares ONE cache
-    # per sf_dir; the layout is embedded in the cache path so a layout
-    # change can never silently reuse a stale cache directory.
-    n_files = int(
-        os.environ.get(
-            "SPARK_GRAFT_CACHE_FILES", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-    )
-    path = os.path.join(cache_root, f"transcripts_{sf_name}_f{n_files}.parquet")
+    # File count = the session's default parallelism, one file per task
+    # slot (round-6 change; was a fixed 64): session.py sizes
+    # maxPartitionBytes so every file is its own split, so the file count
+    # IS the map-stage task count for every consumer of this table. 64
+    # files meant every sub-second sf0.1 scan stage ran TWO waves of tiny
+    # tasks on 32 cores (measured: the scan stage of each headline query
+    # spent ~half its wall in the second wave). One file per core -> one
+    # wave. The count is part of the cache path, so sessions at different
+    # parallelism levels each get their own cache per sf_dir and never
+    # scan a layout written for another level.
+    n_files = spark.sparkContext.defaultParallelism
+    path = os.path.join(_cache_root(), f"transcripts_{sf_name}_f{n_files}.parquet")
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -251,15 +253,10 @@ def transcripts_scaled_df(
     """
     if mult <= 1:
         return transcripts_df(spark, sf_dir)
-    import os
-
     from pyspark.sql import functions as F
 
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    cache_root = os.environ.get(
-        "SPARK_GRAFT_CACHE", os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    )
-    path = os.path.join(cache_root, f"transcripts_{sf_name}_x{mult}.parquet")
+    path = os.path.join(_cache_root(), f"transcripts_{sf_name}_x{mult}.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         base = transcripts_df(spark, sf_dir)
         rep = base.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))

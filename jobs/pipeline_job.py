@@ -46,8 +46,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="optional warehouse dir: commit the run as batch "
                          "submit-0 into the sink_* tables, agg_terms and "
                          "lineage")
-    ap.add_argument("--cpus", type=int, default=None,
-                    help="parallelism level; defaults to SPARK_GRAFT_CPUS")
     args = ap.parse_args(argv)
 
     # Imports resolved from the --py-files zip (or an installed package) —
@@ -58,7 +56,7 @@ def main(argv: list[str] | None = None) -> int:
     from go_distributed_log_search_spark.transcripts import transcripts_df
 
     t0 = time.time()
-    spark = get_spark("pipeline-job", cpus=args.cpus)
+    spark = get_spark("pipeline-job")
     enriched = pipeline.parsed_enriched(spark, args.sf_dir)
 
     n_turns = transcripts_df(spark, args.sf_dir).count()
